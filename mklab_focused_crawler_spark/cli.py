@@ -27,6 +27,11 @@ snapshot tables live under ``--root``; ``--resume`` continues a
 partially-completed crawl from its committed iteration count (same
 contract as tests/test_crawl_loop.py::test_resume_from_snapshot).
 
+``--seen-filter`` picks the seen gate's filter kind (bloom or the
+delete-capable cuckoo); the gate is exact either way — the kind only
+decides how it prunes once the seen set outgrows a broadcast
+anti-join (operators/seen.SeenGate).
+
 Session handling: under spark-submit the JVM gateway already exists
 (PYSPARK_GATEWAY_PORT is set) and the submitted ``--master``/conf must
 win, so the builder attaches without overriding; bare-python runs fall
@@ -66,7 +71,11 @@ def _build_parser() -> argparse.ArgumentParser:
     c.add_argument("--window-ms", type=int, default=1000)
     c.add_argument("--ttl-iterations", type=int, default=None)
     c.add_argument(
-        "--seen-filter", choices=["bloom", "cuckoo", "none"], default="bloom"
+        "--seen-filter",
+        choices=["bloom", "cuckoo"],
+        default="bloom",
+        help="seen-gate filter kind past the broadcast anti-join regime "
+        "(cuckoo also evicts TTL-expired keys physically); exact either way",
     )
     # page-store mode
     c.add_argument("--pages", default=None, help="page-store parquet path")
@@ -142,8 +151,9 @@ def _build_parser() -> argparse.ArgumentParser:
     pl.add_argument(
         "--workdir",
         default=None,
-        help="intermediate-table dir (default: <out>/_stages) — the text "
-        "chain commits clean/prov tables here (the lineage cut)",
+        help="intermediate-table dir (default: the sibling <out>_stages — "
+        "inside <out> the final overwrite would delete it mid-read) — the "
+        "text chain commits clean/prov tables here (the lineage cut)",
     )
     pl.add_argument("--master", default=None)
     return p
@@ -154,6 +164,18 @@ _CLI_META = "cli_meta.json"
 
 def _store_meta_path(root: str) -> str:
     return os.path.join(root, _CLI_META)
+
+
+def _read_store_meta(root: str) -> dict:
+    """The CrawlLoop config recorded at store creation ({} if none).
+    Stores created with the removed ``--seen-filter none`` recorded
+    ``null``; the gate is exact in every kind, so they reopen as bloom
+    with unchanged crawl semantics."""
+    if not os.path.exists(_store_meta_path(root)):
+        return {}
+    with open(_store_meta_path(root)) as f:
+        meta = json.load(f)
+    return {**meta, "seen_filter": meta.get("seen_filter") or "bloom"}
 
 
 def _run_crawl(args) -> dict:
@@ -182,15 +204,14 @@ def _run_crawl(args) -> dict:
     loop_kw = dict(
         window_ms=args.window_ms,
         ttl_iterations=args.ttl_iterations,
-        seen_filter=None if args.seen_filter == "none" else args.seen_filter,
+        seen_filter=args.seen_filter,
     )
-    if args.resume and os.path.exists(_store_meta_path(args.root)):
+    if args.resume:
         # the store's layout (TTL → doc_bucket-partitioned documents)
         # and gate semantics are decided at creation — a resume with
         # different flags would append a mismatched layout or change
         # crawl semantics mid-run, so the recorded config wins
-        with open(_store_meta_path(args.root)) as f:
-            loop_kw.update(json.load(f))
+        loop_kw.update(_read_store_meta(args.root))
 
     from .operators.crawl import CrawlLoop
 
@@ -327,7 +348,7 @@ def _run_pipeline(args) -> dict:
     from .operators.pipeline import pipeline_e2e
 
     spark = _session(args.master)
-    workdir = args.workdir or os.path.join(args.out, "_stages")
+    workdir = args.workdir or args.out.rstrip("/") + "_stages"
     docs = spark.read.parquet(args.in_path)
     out = pipeline_e2e(spark, docs, workdir=workdir)
     out.write.mode("overwrite").parquet(args.out)
@@ -345,12 +366,8 @@ def _run_lineage(args) -> None:
 
     # reconstruct the creation-time config: a TTL store's documents
     # table is doc_bucket-partitioned and reads wrongly without it
-    kw = {}
-    if os.path.exists(_store_meta_path(args.root)):
-        with open(_store_meta_path(args.root)) as f:
-            kw = json.load(f)
     spark = _session(args.master)
-    loop = CrawlLoop(spark, args.root, **kw)
+    loop = CrawlLoop(spark, args.root, **_read_store_meta(args.root))
     for r in loop.lineage().collect():
         print(json.dumps(r.asDict()))
 

@@ -23,9 +23,10 @@ one deterministic BSP super-step over snapshot-committed tables
                   counters collected on the way as observe() metrics.
 5. **discover** — incremental (changelog) re-read of the just-committed
                   document batch → explode out-links → canonicalize →
-                  filter-pruned seen gate (operators/seen.py bloom or
-                  operators/cuckoo.py; StatusCheckBolt first-seen-wins)
-                  → batch dedup → score (RankerBolt formula) → schedule.
+                  seen gate (operators/seen.SeenGate: one prune + one
+                  commit per super-step; StatusCheckBolt first-seen-
+                  wins) → batch dedup → score (RankerBolt formula) →
+                  schedule.
 6. **commit**   — frontier/claims/metrics snapshot commits
                   (storage/snapshot.py). Resume = re-read CURRENT.
 
@@ -71,13 +72,12 @@ efficiency of the rewrite-everything round-1 loop:
   far below core count (6.6 GB/s at 2 cores, 10.5 at 8) — so the
   scaling bench uses ``fetch_fn``: fetch+extract is then CPU-dense and
   cache-resident, which is also the real crawler's cost shape.
-- **Probabilistic filter maintenance is driver-side in the broadcast
-  regime.** Below BROADCAST_BLOOM_MAX_BYTES the per-bucket bloom lives
-  on the driver ({bucket: bits}), probed via one broadcast per
-  iteration and merged in place with numpy from the new-URL keys —
-  zero per-iteration filter jobs (rebuild on seen-set doubling).
-  Beyond broadcast size, the cogroup-by-bucket prune + incremental
-  cogroup merge into the filter table takes over.
+- **The seen gate picks its regime from the seen-set size.** The loop
+  hands operators/seen.SeenGate the candidates, the exact seen set and
+  its size; the gate chooses a broadcast anti-join, a driver-held bloom
+  probed through a broadcast (zero per-iteration filter jobs), or the
+  cogroup-by-bucket filter table — and owns every threshold and piece
+  of filter state behind that choice.
 - **Independent commits overlap.** The claim-tombstone append runs on
   a driver thread during the discover job; the 4-row metrics commit is
   a driver-side Arrow write (no job at all).
@@ -86,7 +86,7 @@ efficiency of the rewrite-everything round-1 loop:
   URLs become claimable again; re-fetched documents route through
   ``SnapshotTable.merge`` (WebPagesUpdaterBolt.java:70-92 upsert), not
   blind append. The cuckoo seen-filter (delete-capable) physically
-  evicts expired keys; the bloom path filters them at join time only.
+  evicts expired keys; the bloom filters them at join time only.
 """
 
 from __future__ import annotations
@@ -105,39 +105,14 @@ from ..sources.synthetic_web import (
     generate_seeds,
 )
 from ..storage.snapshot import SnapshotTable
-from .cuckoo import build_cuckoo, delete_keys, filter_unseen_cuckoo, insert_keys
 from .extraction import extract_articles_native as extract_articles
 from .frontier import claim_batch, expand_redirects
-from .seen import build_bloom, filter_unseen, merge_bloom, with_seen_key
+# BROADCAST_ANTI_MAX_KEYS is re-exported: callers that size a crawl
+# against the seen gate's anti-join regime read it from here
+from .seen import BROADCAST_ANTI_MAX_KEYS, SeenGate, with_seen_key  # noqa: F401
 
 DEFAULT_NOW_MS = BASE_MS + 86_400_000  # fixed "now": 2024-01-02T00:00:00Z
 N_BUCKETS_DEFAULT = 32
-# Below this many seen keys the seen prune is a broadcast ANTI-JOIN of
-# the raw keys (exact, one JVM hash probe, no confirm join, zero Python
-# in the loop): a probabilistic filter compresses the seen set, and
-# below broadcast size the uncompressed 8-byte keys already fit. The
-# pandas-UDF bloom probe pays a Python-worker fan-out per iteration —
-# pure fixed cost at this scale (measured: it dominated small-workload
-# iterations), amortized only when candidate batches are huge.
-# 200k, not "whatever fits in a broadcast": re-broadcasting the raw key
-# set is itself a per-iteration serial cost that grows with the seen set
-# (collect + build on the driver, core-count independent) — measured at
-# the 2M-page scaling workload (~1M seen keys) it cut local[8] crawl
-# throughput from 15.9k to 10.9k urls/s. The driver-bloom regime's
-# fixed cost is O(filter bits), ~12x smaller, so it takes over early.
-BROADCAST_ANTI_MAX_KEYS = 200_000
-# Below this bloom size the per-bucket filters are collected+broadcast so
-# the seen-prune never shuffles candidates; above it (≈10^9+ seen keys)
-# the cogroup-by-bucket path takes over. See operators/seen.filter_unseen.
-BROADCAST_BLOOM_MAX_BYTES = 256 << 20
-# Below this seen-set size a fresh per-iteration filter build (one scan
-# of a small table) is cheaper than maintaining the filter table
-# incrementally; above it, rebuild cost grows with the seen set while
-# merge cost stays proportional to the new-key batch — switch to
-# incremental merge + rebuild-on-doubling. 500k: the rebuild scan is a
-# flat ~3s/iteration cost well before it, and the incremental cogroup
-# is O(new keys) regardless.
-FILTER_INCREMENTAL_MIN_KEYS = 500_000
 # Fold claim tombstones into the frontier when they exceed this fraction
 # of total frontier rows (amortized O(1)/row; Iceberg MERGE + compaction
 # on a real cluster). 1.0 balances the costs: carrying tombstones adds
@@ -202,17 +177,11 @@ def score_candidates(
     )
 
 
-def _candidate_keys(urls_df: DataFrame, n_buckets: int) -> DataFrame:
-    """url (+ ns/ph discovery-priority columns) → + canonical_url /
-    url_hash / bucket."""
-    return with_seen_key(urls_df, "url", n_buckets)
-
-
 class CrawlLoop:
     """Owns the iteration control Spark lacks natively (SURVEY §7 hard
     part #5) and the snapshot tables: frontier (= seen set), claims
-    (tombstones), documents, metrics, and the probabilistic seen-filter
-    (bloom or cuckoo)."""
+    (tombstones), documents, metrics; the URL-seen gate (bloom or cuckoo
+    filter) is a SeenGate."""
 
     def __init__(
         self,
@@ -220,7 +189,7 @@ class CrawlLoop:
         root: str,
         n_buckets: int = N_BUCKETS_DEFAULT,
         now_ms: int = DEFAULT_NOW_MS,
-        seen_filter: str | None = "bloom",
+        seen_filter: str = "bloom",
         window_ms: int = 1000,
         ttl_iterations: int | None = None,
         transport_factory=None,
@@ -260,8 +229,11 @@ class CrawlLoop:
         deterministic bench web). Fetch misses = rows the fn drops.
         Mutually exclusive with ``transport_factory``; when set,
         ``run()`` takes an explicit redirect map and pages_meta and
-        ``pages`` may be None."""
-        assert seen_filter in (None, "bloom", "cuckoo")
+        ``pages`` may be None.
+
+        ``seen_filter``: the seen gate's filter kind past the anti-join
+        regime — ``"bloom"`` or ``"cuckoo"`` (delete-capable, evicts
+        TTL-expired keys physically); see operators/seen.SeenGate."""
         assert fetch_join in ("broadcast", "bucketed")
         assert transport_factory is None or fetch_fn is None
         assert transport_redirects == 0 or transport_factory is not None
@@ -271,7 +243,6 @@ class CrawlLoop:
         self.spark = spark
         self.now_ms = now_ms
         self.n_buckets = n_buckets
-        self.seen_filter = seen_filter
         self.window_ms = window_ms  # politeness window per super-step
         self.ttl = ttl_iterations  # CrawlDecider TTL, in super-steps
         self.transport_factory = transport_factory
@@ -289,16 +260,9 @@ class CrawlLoop:
             partition_by=("doc_bucket",) if ttl_iterations is not None else (),
         )
         self.metrics = SnapshotTable(root, "metrics")
-        self.filter_table = SnapshotTable(root, "seen_filter")
+        self.gate = SeenGate(spark, root, seen_filter, ttl_iterations)
         self._n_seen: int | None = None  # frontier rows (= seen keys)
         self._n_tombs: int | None = None  # un-compacted claim tombstones
-        # keys in the filter at its last from-scratch build; rebuild at
-        # the new size when the merged key count doubles it (FPR /
-        # occupancy creep guard)
-        self._filter_built_keys: int | None = None
-        self._bloom_np: dict | None = None  # driver bloom (broadcast regime)
-        self._bloom_bc = None  # live broadcast of _bloom_np (1 per iter)
-        self._bloom_built_keys: int | None = None
         self._meta: DataFrame | None = None  # cached (url, shares, pub_ms)
         self._redirects: DataFrame | None = None  # cached redirect closure
         self._host_delays_bc = None  # {host: delay} for live redirect hops
@@ -307,12 +271,13 @@ class CrawlLoop:
     def init(self, seeds: DataFrame, pages_meta: DataFrame) -> None:
         """Seed the frontier; seeds are seen at injection
         (StatusCheckBolt semantics: mark when scheduled, not fetched)."""
-        k = _candidate_keys(
+        k = with_seen_key(
             seeds.select(
                 "url",
                 F.col("rank").cast("double").alias("ns"),
                 F.lit(0).cast("long").alias("ph"),
             ),
+            "url",
             self.n_buckets,
         )
         cand = dedup_first_seen(k).drop("ns", "ph")
@@ -324,12 +289,6 @@ class CrawlLoop:
         )
         self._n_seen = self.frontier.read(self.spark).count()
         self._n_tombs = 0
-        if self.seen_filter and not (
-            self.seen_filter == "bloom" and self._n_seen <= BROADCAST_ANTI_MAX_KEYS
-        ):
-            # anti-join regime needs no filter at all; it is (re)built
-            # on demand if the seen set ever outgrows the broadcast
-            self._rebuild_filter(0)
 
     def seen_df(
         self, iteration: int | None = None, frontier_df: DataFrame | None = None
@@ -398,56 +357,6 @@ class CrawlLoop:
         df = self.metrics.read(self.spark)
         row = df.agg(F.max("iteration")).collect()[0][0]
         return int(row) + 1 if row is not None else 0
-
-    # -- probabilistic seen-filter maintenance --------------------------
-    def _rebuild_filter(self, iteration: int, frontier_df: DataFrame | None = None) -> None:
-        seen = self.seen_df(iteration, frontier_df)
-        build = build_bloom if self.seen_filter == "bloom" else build_cuckoo
-        self.filter_table.overwrite(build(seen))
-        self._filter_built_keys = self._n_seen
-        self._bloom_np = None  # stale driver copy (re-collected on demand)
-        if self._bloom_bc is not None:  # broadcast of the stale bits
-            self._bloom_bc.destroy()
-            self._bloom_bc = None
-
-    def _ensure_driver_bloom(self, iteration: int, frontier_df: DataFrame | None) -> dict:
-        """Driver-held per-bucket bloom for the broadcast-probe regime:
-        {bucket: (nbits, bits array)}. Rebuilt (one distributed build +
-        collect) on first use and when the seen set doubles; between
-        rebuilds it is maintained in place by a numpy merge of each
-        iteration's new keys (``seen.merge_bloom_driver``) — replacing
-        the round-1 per-iteration Spark jobs (fresh build scan or
-        cogroup merge + filter-table commit), which were the dominant
-        core-count-independent serial term of the discover stage. Under
-        TTL, expired keys persist until the next rebuild — a safe
-        over-approximation (bloom hits are exactly confirmed)."""
-        from .seen import collect_bloom
-
-        if (
-            self._bloom_np is None
-            or self._bloom_built_keys is None
-            or self._n_seen > 2 * self._bloom_built_keys
-        ):
-            self._bloom_np = collect_bloom(
-                build_bloom(self.seen_df(iteration, frontier_df))
-            )
-            self._bloom_built_keys = self._n_seen
-        return self._bloom_np
-
-    def _filter_df(
-        self, iteration: int, incremental: bool, frontier_df: DataFrame | None = None
-    ) -> DataFrame:
-        if not incremental:
-            # small seen set: fresh build is one cheap scan
-            build = build_bloom if self.seen_filter == "bloom" else build_cuckoo
-            return build(self.seen_df(iteration, frontier_df))
-        if (
-            not self.filter_table.exists()
-            or self._filter_built_keys is None
-            or self._n_seen > 2 * self._filter_built_keys
-        ):
-            self._rebuild_filter(iteration, frontier_df)
-        return self.filter_table.read(self.spark)
 
     # ------------------------------------------------------------------
     def run_iteration(
@@ -711,48 +620,8 @@ class CrawlLoop:
         # references the candidate chain from two branches — without
         # materialization the whole explode+canonicalize+hash pipeline
         # (the iteration's widest map stage) executes twice
-        cand = _candidate_keys(links, self.n_buckets).persist()
-        seen = self.seen_df(iteration, fr)
-        incremental = self._n_seen >= FILTER_INCREMENTAL_MIN_KEYS
-        anti_broadcast = (
-            self.seen_filter == "bloom" and self._n_seen <= BROADCAST_ANTI_MAX_KEYS
-        )
-        bloom_broadcast = (
-            not anti_broadcast
-            and self.seen_filter == "bloom"
-            and (self._n_seen * 1.2 * 12 / 8)  # keys → approx filter bytes
-            <= BROADCAST_BLOOM_MAX_BYTES
-        )
-        if anti_broadcast:
-            # small-seen regime: exact broadcast anti-join, no filter
-            # maintenance at all (the driver bloom rebuilds from the
-            # frontier on first use if the seen set outgrows this)
-            pruned = filter_unseen(cand, seen, None, broadcast_seen=True)
-        elif bloom_broadcast:
-            # broadcast regime: the filter lives on the DRIVER
-            # ({bucket: bits}), probed via one broadcast — no candidate
-            # shuffle, and maintenance is a numpy merge after commit
-            # (zero per-iteration filter jobs; rebuild on doubling).
-            # The bits change every iteration, so each needs a fresh
-            # broadcast — destroy last iteration's NOW (its jobs all
-            # completed at the previous new_urls.unpersist) instead of
-            # letting snapshots pile up until the ContextCleaner runs
-            if self._bloom_bc is not None:
-                self._bloom_bc.destroy()
-            self._bloom_bc = self.spark.sparkContext.broadcast(
-                self._ensure_driver_bloom(iteration, fr)
-            )
-            pruned = filter_unseen(cand, seen, self._bloom_bc)
-        elif self.seen_filter == "bloom":
-            # beyond-broadcast regime (10^10 keys): cogroup-by-bucket
-            # prune + incremental cogroup merge into the filter table
-            bloom = self._filter_df(iteration, incremental, fr)
-            pruned = filter_unseen(cand, seen, bloom, broadcast_bloom=False)
-        elif self.seen_filter == "cuckoo":
-            filt = self._filter_df(iteration, incremental, fr).persist()
-            pruned = filter_unseen_cuckoo(cand, seen, filt)
-        else:
-            pruned = filter_unseen(cand, seen, None)
+        cand = with_seen_key(links, "url", self.n_buckets).persist()
+        pruned = self.gate.prune(cand, self.seen_df(iteration, fr), self._n_seen)
         obs_sched = Observation()
         new_urls = (
             score_candidates(
@@ -766,25 +635,8 @@ class CrawlLoop:
         )
 
         jd("filter")
-        if (
-            self.seen_filter == "bloom"
-            and not anti_broadcast
-            and not bloom_broadcast
-            and incremental
-        ):
-            self.filter_table.overwrite(
-                merge_bloom(self.filter_table.read(self.spark), new_urls)
-            )
-        elif self.seen_filter == "cuckoo":
-            if incremental:
-                upd = insert_keys(filt, new_urls)
-                if self.ttl is not None:
-                    aging_out = fr.filter(
-                        F.col("first_seen_iter") == F.lit(iteration + 1 - self.ttl)
-                    )
-                    upd = delete_keys(upd, aging_out)
-                self.filter_table.overwrite(upd)
-            filt.unpersist()
+        # the filter commits BEFORE the frontier append (crash order above)
+        self.gate.commit(new_urls, iteration, fr)
         # narrow-table writes coalesce to a handful of files: these
         # frames sit in cache at full core-count partitioning, and tiny
         # per-task files just add scheduler + committer overhead
@@ -793,15 +645,6 @@ class CrawlLoop:
         self.frontier.append(new_urls.coalesce(8))
         cand.unpersist()  # new_urls is materialized; cand no longer needed
         n_new = int(obs_sched.get["n_new"])
-        if bloom_broadcast:
-            # in-place driver merge off the (cached) new-URL keys — the
-            # broadcast regime's whole filter maintenance
-            from .seen import merge_bloom_driver
-
-            merge_bloom_driver(
-                self._bloom_np,
-                new_urls.select("bucket", "url_hash").toArrow(),
-            )
         lap("frontier")
         claims_thread.join()
         lap("claims")
@@ -974,7 +817,7 @@ class CrawlLoop:
 
     def close(self) -> None:
         """Release the per-loop caches (partitioned metadata, redirect
-        closure)."""
+        closure, seen-gate filter state)."""
         if self._meta is not None:
             self._meta.unpersist()
             self._meta = None
@@ -984,9 +827,7 @@ class CrawlLoop:
         if self._host_delays_bc is not None:
             self._host_delays_bc.destroy()
             self._host_delays_bc = None
-        if self._bloom_bc is not None:
-            self._bloom_bc.destroy()
-            self._bloom_bc = None
+        self.gate.close()
 
     # ------------------------------------------------------------------
     def lineage(self) -> DataFrame:

@@ -11,8 +11,8 @@ positions per key, delete = remove one matching fingerprint.
 Same partitioning contract as the Bloom path: keys are
 ``xxhash64(canonical_url)`` bucketed by ``pmod(url_hash, n_buckets)``;
 each bucket's filter is built inside ``applyInPandas`` (never on the
-driver) and probed either broadcast (small) or cogrouped by bucket
-(huge). False positives are possible (→ confirm with the exact table,
+driver) and probed cogrouped by bucket (seen.SeenGate's filter-table
+regime). False positives are possible (→ confirm with the exact table,
 as with Bloom); false negatives are impossible for inserted-and-not-
 deleted keys — property-tested.
 
@@ -112,7 +112,7 @@ class CuckooTable:
             if len(empty):
                 self.slots[i, empty[0]] = fp
                 return True
-        return False  # over capacity: build grows; insert_keys raises
+        return False  # over capacity: build grows; insert_keys saturates
 
     # -- vectorized ops ---------------------------------------------------
     def contains(self, hashes: np.ndarray) -> np.ndarray:
@@ -189,7 +189,7 @@ def delete_keys(cuckoo: DataFrame, expired: DataFrame) -> DataFrame:
         m = int(filt["m"].iloc[0])
         t = CuckooTable.from_bytes(m, filt["slots"].iloc[0])
         n_removed = 0
-        if len(exp):
+        if len(exp) and m:  # a saturated bucket (m=0) holds no fingerprints
             n_removed = t.delete(exp["url_hash"].to_numpy())
         return pd.DataFrame(
             {
@@ -212,10 +212,12 @@ def insert_keys(cuckoo: DataFrame, new_keys: DataFrame) -> DataFrame:
     incremental maintenance (the cuckoo twin of seen.merge_bloom), so
     the growing seen table is never rescanned per iteration. Buckets
     with no prior filter get a fresh one. A cuckoo filter cannot grow
-    in place (re-indexing needs the original keys, not fingerprints);
-    when an insert overflows the eviction walk the caller must rebuild
-    from the exact seen table — CrawlLoop tracks occupancy and rebuilds
-    on doubling, so the walk never overflows in practice."""
+    in place (re-indexing needs the original keys, not fingerprints):
+    a bucket whose eviction walk overflows is SATURATED (``m=0``, no
+    slots) — every probe of it hits and is confirmed exactly, so it
+    stops pruning but never drops a seen key — until the caller
+    rebuilds from the exact seen table (seen.SeenGate rebuilds when the
+    seen set doubles)."""
 
     def ins(filt: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
         if len(filt) == 0:
@@ -232,14 +234,11 @@ def insert_keys(cuckoo: DataFrame, new_keys: DataFrame) -> DataFrame:
             )
         m = int(filt["m"].iloc[0])
         t = CuckooTable.from_bytes(m, filt["slots"].iloc[0])
-        if len(keys):
-            rng = np.random.RandomState(12345)
-            for h in keys["url_hash"].to_numpy().astype(np.uint64):
-                if not t._insert_one(int(h), rng):
-                    raise RuntimeError(
-                        "cuckoo filter over capacity — rebuild from the "
-                        "exact seen table (CrawlLoop rebuilds on doubling)"
-                    )
+        rng = np.random.RandomState(12345)
+        hashes = keys["url_hash"].to_numpy().astype(np.uint64)
+        if m and not all(t._insert_one(int(h), rng) for h in hashes):
+            # the failed walk dropped a fingerprint: saturate the bucket
+            m, t = 0, CuckooTable(0)
         return pd.DataFrame(
             {
                 "bucket": [int(filt["bucket"].iloc[0])],
@@ -269,6 +268,8 @@ def filter_unseen_cuckoo(
         if len(filt) == 0:
             return cand.assign(might_contain=False)
         m = int(filt["m"].iloc[0])
+        if m == 0:  # saturated by an overflowing insert: confirm them all
+            return cand.assign(might_contain=True)
         t = CuckooTable.from_bytes(m, filt["slots"].iloc[0])
         return cand.assign(might_contain=t.contains(cand["url_hash"].to_numpy()))
 

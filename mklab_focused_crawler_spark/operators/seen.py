@@ -1,4 +1,5 @@
-"""URL-seen set: exact first-seen-wins table + partitioned Bloom filter.
+"""URL-seen set: exact first-seen-wins gate, pruned by a partitioned
+Bloom (or cuckoo) filter once the seen set outgrows a broadcast.
 
 Reference semantics: StatusCheckBolt.java:59-68 — Redis
 ``hget(id,"STATUS")``; emit only if absent, then mark. First-seen-wins,
@@ -6,26 +7,37 @@ exact. CrawlDecider.java:14,23-36 adds a 24h TTL variant.
 
 Spark design (north_rule): the seen set is keyed on
 ``xxhash64(canonical_url)`` and bucketed by ``pmod(url_hash, n_buckets)``.
-Membership testing for a candidate batch is:
+:class:`SeenGate` owns the whole decision of how a candidate batch is
+tested against it — one regime per seen-set size, each exact:
 
-1. **Bloom prune** — per-bucket Bloom filters (built vectorized in
-   numpy inside ``applyInPandas``) are cogrouped with the candidates on
-   ``bucket``; candidates whose bits miss are *definitely new* and skip
-   the exact join entirely.
-2. **Exact confirm** — Bloom hits (possible false positives) go through
-   a ``left_anti`` join against the exact seen table.
+1. **≤ BROADCAST_ANTI_MAX_KEYS seen keys** — the raw keys broadcast into
+   one anti-join. No filter exists at all.
+2. **Bloom bits fit a broadcast** (``kind="bloom"``, ≲10^9 keys) — the
+   per-bucket Bloom lives on the driver, is probed through a broadcast
+   in a narrow pandas UDF (candidates never shuffle) and is merged in
+   place with numpy from each batch's new keys.
+3. **Beyond that** — per-bucket filters (built vectorized in numpy
+   inside ``applyInPandas``) are kept in the ``seen_filter`` snapshot
+   table and cogrouped with the candidates on ``bucket``; maintenance
+   is an incremental cogroup merge (Bloom) or insert + TTL delete
+   (cuckoo, operators/cuckoo.py — the delete-capable sketch). Every
+   ``kind="cuckoo"`` gate past regime 1 lands here.
 
-Bloom never drops a truly-new URL (no false negatives — property-tested)
-and never admits a seen one (anti-join is exact), so seen-set parity is
-exact; the Bloom only prunes join volume.
+In regimes 2-3 filter misses are *definitely new* and skip the exact
+join; filter hits (possible false positives) go through a ``left_anti``
+join against the exact seen table. A filter never drops a truly-new URL
+(no false negatives — property-tested) and the confirm never admits a
+seen one, so seen-set parity is exact in every regime; the filter only
+prunes join volume. Filters are rebuilt from the exact seen table when
+the seen set doubles past their build size (FPR / occupancy creep).
 
 Scale math (10^10 keys): n_buckets=16384 → ~610k keys/bucket; at 12
 bits/key each bucket's filter is ~0.9 MB — safely inside an executor
 task, never on the driver. Candidates shuffle by the same ``bucket``
 key the seen table is bucketed on, so the cogroup is co-partitioned
 with the exact table's anti-join. The 24h TTL variant filters
-``first_seen_iter`` at join time; physical deletion would move to a
-cuckoo filter (delete-capable) — see operators/cuckoo.py.
+``first_seen_iter`` at join time; the cuckoo filter also evicts
+expired keys physically.
 """
 
 from __future__ import annotations
@@ -35,19 +47,34 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.broadcast import Broadcast
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.urls import canonicalize_url
+from ..storage.snapshot import SnapshotTable
+from .cuckoo import build_cuckoo, delete_keys, filter_unseen_cuckoo, insert_keys
 
 N_HASHES = 7
 BITS_PER_KEY = 12
-
-
-def url_hash(col) -> F.Column:
-    """Seen-set key: xxhash64 of the canonical URL (north_rule)."""
-    return F.xxhash64(canonicalize_url(col))
+# Below this many seen keys the seen prune is a broadcast ANTI-JOIN of
+# the raw keys (exact, one JVM hash probe, no confirm join, zero Python
+# in the loop): a probabilistic filter compresses the seen set, and
+# below broadcast size the uncompressed 8-byte keys already fit. The
+# pandas-UDF bloom probe pays a Python-worker fan-out per iteration —
+# pure fixed cost at this scale (measured: it dominated small-workload
+# iterations), amortized only when candidate batches are huge.
+# 200k, not "whatever fits in a broadcast": re-broadcasting the raw key
+# set is itself a per-iteration serial cost that grows with the seen set
+# (collect + build on the driver, core-count independent) — measured at
+# the 2M-page scaling workload (~1M seen keys) it cut local[8] crawl
+# throughput from 15.9k to 10.9k urls/s. The driver-bloom regime's
+# fixed cost is O(filter bits), ~12x smaller, so it takes over early.
+BROADCAST_ANTI_MAX_KEYS = 200_000
+# Below this bloom size the per-bucket filters live on the driver and
+# are broadcast so the seen-prune never shuffles candidates; above it
+# (≈10^9+ seen keys) the cogroup-by-bucket path takes over.
+BROADCAST_BLOOM_MAX_BYTES = 256 << 20
 
 
 def with_seen_key(df: DataFrame, url_col: str, n_buckets: int) -> DataFrame:
@@ -164,37 +191,27 @@ def collect_bloom(bloom: DataFrame) -> dict:
     }
 
 
-def merge_bloom_driver(table: dict, rows) -> None:
+def merge_bloom_driver(table: dict, keys) -> None:
     """OR a batch of (bucket, url_hash) keys into a driver-held filter
     table in place — the broadcast regime's incremental maintenance.
     One numpy pass per touched bucket (~µs/key); replaces a per-
     iteration Spark cogroup job + filter-table commit. Buckets with no
-    filter yet get one sized for the batch (the caller's rebuild-on-
+    filter yet get one sized for the batch (the gate's rebuild-on-
     doubling pass right-sizes it later).
 
-    ``rows`` is a pyarrow Table with (bucket, url_hash) columns — the
+    ``keys`` is a pyarrow Table with (bucket, url_hash) columns — the
     whole batch stays columnar on the driver (a Row list spent more
     per-iteration serial time building Python objects than the merge
-    itself) — or a Row list (tests/small paths)."""
-    if rows is None:
+    itself)."""
+    if keys.num_rows == 0:
         return
-    if hasattr(rows, "column_names"):  # pyarrow.Table: zero-copy columns
-        if rows.num_rows == 0:
-            return
-        bks = rows["bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
-        khs = (
-            rows["url_hash"]
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-            .astype(np.uint64)
-        )
-    else:
-        if not rows:
-            return
-        bks = np.array([int(r["bucket"]) for r in rows], dtype=np.int64)
-        khs = np.array([int(r["url_hash"]) for r in rows], dtype=np.int64).astype(
-            np.uint64
-        )
+    bks = keys["bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
+    khs = (
+        keys["url_hash"]
+        .to_numpy(zero_copy_only=False)
+        .astype(np.int64)
+        .astype(np.uint64)
+    )
     order = np.argsort(bks, kind="stable")
     bks, khs = bks[order], khs[order]
     uniq, starts = np.unique(bks, return_index=True)
@@ -214,8 +231,7 @@ def merge_bloom_driver(table: dict, rows) -> None:
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: DataFrame | dict | Broadcast | None,
-    broadcast_bloom: bool = False,
+    bloom: DataFrame | Broadcast | None,
     broadcast_seen: bool = False,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url_hash is not in ``seen``.
@@ -223,51 +239,36 @@ def filter_unseen(
     candidates must carry (url_hash, bucket). With a bloom, definite
     misses skip the anti-join; hits are confirmed exactly.
 
-    Three physical strategies, picked by the caller's size knowledge:
-    - ``broadcast_seen=True`` (bloom must be None): the seen KEYS
-      themselves broadcast into a single anti-join — exact in one JVM
-      hash probe, no confirm join, no shuffle of the candidates, and
-      **no Python anywhere**. Right while the per-iteration re-ship of
-      the raw keys (a driver-serial cost that grows with the frontier)
-      undercuts the bloom regime's fixed O(filter bits) cost — the
-      caller caps it at crawl.BROADCAST_ANTI_MAX_KEYS (200k), well
-      before broadcast capacity matters.
-    - ``broadcast_bloom=True``: broadcast the per-bucket filters (small
-      — up to a few hundred MB of bits; pass a ``collect_bloom`` dict
-      to skip the collect job) and probe them in a narrow scalar
-      pandas UDF — the candidates are **never shuffled** for the prune.
-      Right when the seen keys outgrow the anti-join regime but
-      12 bits/key of filter still fits (≲10^9 seen keys); this is the
-      regime the scaling bench lives in.
-    - cogroup (default): candidates shuffle by ``bucket`` to meet their
-      bucket's filter — the only option when the filters themselves are
-      too big to broadcast (the 10^10-key design point).
+    The physical strategy follows ``bloom``'s form (:class:`SeenGate`
+    picks it from the seen-set size):
+    - ``None``: a plain anti-join of the seen keys. With
+      ``broadcast_seen=True`` the keys broadcast — exact in one JVM hash
+      probe, no confirm join, no shuffle of the candidates and **no
+      Python anywhere**; otherwise a shuffle-hash anti-join.
+    - a ``Broadcast`` of the driver-held ``{bucket: (nbits, bits)}``
+      table: probed in a narrow scalar pandas UDF — the candidates are
+      **never shuffled** for the prune. The caller owns the broadcast's
+      lifecycle (the gate re-broadcasts its driver-maintained bits each
+      iteration and destroys the previous one — without that,
+      per-iteration broadcasts pile up in the block managers until the
+      JVM ContextCleaner happens to run).
+    - a per-bucket filter DataFrame (:func:`build_bloom` shape):
+      candidates shuffle by ``bucket`` to meet their bucket's filter —
+      the only option when the filters themselves are too big to
+      broadcast (the 10^10-key design point).
     """
     if bloom is None:
         if broadcast_seen:
             return candidates.join(
                 broadcast(seen.select("url_hash")), "url_hash", "left_anti"
             )
-        return candidates.join(
-            _seen_keys(seen), "url_hash", "left_anti"
-        )
+        return candidates.join(_seen_keys(seen), "url_hash", "left_anti")
 
-    if broadcast_bloom or isinstance(bloom, (dict, Broadcast)):
-        spark = candidates.sparkSession
-        if isinstance(bloom, Broadcast):
-            # caller-owned broadcast: the caller controls the lifecycle
-            # (the crawl loop re-broadcasts its driver-maintained bits
-            # each iteration and destroys the previous one — without
-            # that, per-iteration broadcasts pile up in the block
-            # managers until the JVM ContextCleaner happens to run)
-            bc = bloom
-        else:
-            table = bloom if isinstance(bloom, dict) else collect_bloom(bloom)
-            bc = spark.sparkContext.broadcast(table)
+    if isinstance(bloom, Broadcast):
 
         @F.pandas_udf("boolean")
         def might(url_hash: pd.Series, bucket: pd.Series) -> pd.Series:
-            tbl = bc.value
+            tbl = bloom.value
             h = url_hash.to_numpy().astype(np.uint64)
             b = bucket.to_numpy()
             out = np.zeros(len(h), dtype=bool)
@@ -286,10 +287,7 @@ def filter_unseen(
         checked = candidates.withColumn(
             "might_contain", might(F.col("url_hash"), F.col("bucket"))
         )
-        definite_new = checked.filter(~F.col("might_contain")).drop("might_contain")
-        maybe = checked.filter(F.col("might_contain")).drop("might_contain")
-        confirmed_new = maybe.join(_seen_keys(seen), "url_hash", "left_anti")
-        return definite_new.unionByName(confirmed_new)
+        return _confirm(checked, seen)
 
     def check(cand: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
         if len(cand) == 0:
@@ -310,6 +308,12 @@ def filter_unseen(
         .cogroup(bloom.groupBy("bucket"))
         .applyInPandas(check, schema + ", might_contain boolean")
     )
+    return _confirm(checked, seen)
+
+
+def _confirm(checked: DataFrame, seen: DataFrame) -> DataFrame:
+    """Filter misses are definitely new; filter hits are confirmed by
+    an exact anti-join against the seen keys."""
     definite_new = checked.filter(~F.col("might_contain")).drop("might_contain")
     maybe = checked.filter(F.col("might_contain")).drop("might_contain")
     confirmed_new = maybe.join(_seen_keys(seen), "url_hash", "left_anti")
@@ -326,3 +330,116 @@ def _seen_keys(seen: DataFrame) -> DataFrame:
     sorts."""
     return seen.select("url_hash").hint("shuffle_hash")
 
+
+class SeenGate:
+    """The crawl loop's URL-seen gate: picks the regime for the current
+    seen-set size (module docstring) and owns that regime's filter
+    state — the driver-held Bloom and its live broadcast, or the
+    ``seen_filter`` snapshot table.
+
+    Per super-step the loop calls :meth:`prune` once (candidates → the
+    not-yet-seen ones, exact) and, with the new frontier rows, :meth:`commit`
+    once BEFORE appending them to the frontier: a crash between the two
+    leaves a filter that over-approximates the seen set (extra exact
+    confirms), never one that misses a seen key. Filters are built
+    lazily on the first prune that needs one, from the exact seen table,
+    and rebuilt when the seen set doubles past the build size; a gate
+    created on resume rebuilds on first use, so a stale table is never
+    trusted."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        kind: str = "bloom",
+        ttl_iterations: int | None = None,
+    ):
+        if kind not in ("bloom", "cuckoo"):
+            raise ValueError(f"seen filter kind must be bloom or cuckoo, not {kind!r}")
+        self.spark = spark
+        self.kind = kind
+        self.ttl = ttl_iterations
+        self.table = SnapshotTable(root, "seen_filter")
+        self._regime: str | None = None  # regime of the last prune
+        self._built_keys: int | None = None  # seen keys at the last build
+        self._bloom: dict | None = None  # driver bloom {bucket: (nbits, bits)}
+        self._bloom_bc: Broadcast | None = None  # live broadcast of _bloom
+        self._filt: DataFrame | None = None  # cuckoo table, probe → commit
+
+    def regime(self, n_seen: int) -> str:
+        """``anti`` | ``driver_bloom`` | ``table`` for ``n_seen`` keys."""
+        if n_seen <= BROADCAST_ANTI_MAX_KEYS:
+            return "anti"
+        bloom_bytes = n_seen * 1.2 * BITS_PER_KEY / 8  # ~1.2x sizing slack
+        if self.kind == "bloom" and bloom_bytes <= BROADCAST_BLOOM_MAX_BYTES:
+            return "driver_bloom"
+        return "table"
+
+    def prune(self, cand: DataFrame, seen: DataFrame, n_seen: int) -> DataFrame:
+        """``cand`` rows whose url_hash is not in ``seen`` (the exact,
+        TTL-cut seen set of this super-step; ``n_seen`` = frontier rows).
+        ``cand`` is read by two branches of the filter regimes' union —
+        persist it."""
+        regime = self.regime(n_seen)
+        if regime != self._regime:  # a new regime starts from a fresh build
+            self.close()
+            self._regime = regime
+        stale = self._built_keys is None or n_seen > 2 * self._built_keys
+        if regime == "anti":
+            return filter_unseen(cand, seen, None, broadcast_seen=True)
+        if regime == "driver_bloom":
+            if stale:
+                self._bloom = collect_bloom(build_bloom(seen))
+                self._built_keys = n_seen
+            # the bits change every super-step, so each needs a fresh
+            # broadcast; last step's jobs have all completed by now
+            if self._bloom_bc is not None:
+                self._bloom_bc.destroy()
+            self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom)
+            return filter_unseen(cand, seen, self._bloom_bc)
+        if stale:
+            build = build_bloom if self.kind == "bloom" else build_cuckoo
+            self.table.overwrite(build(seen))
+            self._built_keys = n_seen
+        if self.kind == "bloom":
+            return filter_unseen(cand, seen, self.table.read(self.spark))
+        # probed now and updated in commit: read the table once
+        self._filt = self.table.read(self.spark).persist()
+        return filter_unseen_cuckoo(cand, seen, self._filt)
+
+    def commit(
+        self, new_urls: DataFrame, iteration: int, frontier_df: DataFrame
+    ) -> None:
+        """Fold this super-step's newly scheduled keys (first seen at
+        ``iteration + 1``) into the filter of the last prune's regime.
+        With TTL, the cuckoo filter also evicts the ``frontier_df`` keys
+        that expire at ``iteration + 1``; the Bloom keeps them until its
+        next rebuild (hits are confirmed exactly)."""
+        if self._regime == "driver_bloom":
+            merge_bloom_driver(
+                self._bloom, new_urls.select("bucket", "url_hash").toArrow()
+            )
+        elif self._regime == "table" and self.kind == "bloom":
+            self.table.overwrite(merge_bloom(self.table.read(self.spark), new_urls))
+        elif self._regime == "table":
+            upd = insert_keys(self._filt, new_urls)
+            if self.ttl is not None:
+                aging_out = frontier_df.filter(
+                    F.col("first_seen_iter") == F.lit(iteration + 1 - self.ttl)
+                )
+                upd = delete_keys(upd, aging_out)
+            self.table.overwrite(upd)
+            self._filt.unpersist()
+            self._filt = None
+
+    def close(self) -> None:
+        """Release the driver bloom, its broadcast and any cached filter
+        frame; a later prune rebuilds what it needs."""
+        self._built_keys = None
+        self._bloom = None
+        if self._bloom_bc is not None:
+            self._bloom_bc.destroy()
+            self._bloom_bc = None
+        if self._filt is not None:
+            self._filt.unpersist()
+            self._filt = None

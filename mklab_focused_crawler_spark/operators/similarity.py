@@ -1018,7 +1018,8 @@ def train_pq_codebooks_df(embeddings: DataFrame) -> list[list[list[int]]]:
     """Train from a Spark embeddings table — same scale-adaptive
     decimation (and therefore the same sample) as the coarse-quantizer
     job, so one collected sample serves both trainings at deployment."""
-    mod = train_sample_mod(embeddings.count())
+    n = embeddings.count()
+    mod = train_sample_mod(n, k=derive_k_lists(n))
     rows = (
         embeddings.filter(F.col("vec_id") % mod == 0)
         .select("vec_id", "embedding")
@@ -1033,7 +1034,7 @@ def train_pq_codebooks_parquet(path: str) -> list[list[list[int]]]:
     import pyarrow.parquet as pq
 
     t = pq.read_table(path, columns=["vec_id", "embedding"])
-    mod = train_sample_mod(t.num_rows)
+    mod = train_sample_mod(t.num_rows, k=derive_k_lists(t.num_rows))
     return train_pq_codebooks(
         (v, e)
         for v, e in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())

@@ -270,12 +270,21 @@ def _lsh_meta_path(store_root: str) -> str:
 
 
 def _read_key_buckets(store_root: str) -> int | None:
+    """The store's committed band/shingle fan-out, or None for a store
+    with no index data yet. A store written before the fan-out was
+    recorded (index tables, no lsh_meta.json) is laid out at the then
+    fixed LSH_KEY_BUCKETS: that value is committed here, so a reopen
+    never derives a different fan-out over the existing partitions."""
     import json
     import os
 
     p = _lsh_meta_path(store_root)
     if not os.path.exists(p):
-        return None
+        tables = _make_lsh_tables(store_root)
+        if not (tables["bands"].exists() or tables["shingles"].exists()):
+            return None
+        _commit_key_buckets(store_root, LSH_KEY_BUCKETS)
+        return LSH_KEY_BUCKETS
     with open(p) as f:
         return int(json.load(f)["key_buckets"])
 

@@ -338,7 +338,9 @@ def test_cli_validation_runs_before_session(tmp_path, monkeypatch):
 
 def test_cli_pipeline_runs_end_to_end(spark, tmp_path, capsys):
     """The pipeline subcommand: documents parquet in → packed chunk map
-    out, intermediate tables under --workdir, one JSON result line."""
+    out, intermediate tables under the default workdir (the sibling
+    <out>_stages — inside --out the final overwrite would delete them
+    while the plan still reads them), one JSON result line."""
     import json
 
     from mklab_focused_crawler_spark.cli import main
@@ -368,3 +370,43 @@ def test_cli_pipeline_runs_end_to_end(spark, tmp_path, capsys):
         "piece_len",
     } == set(got.columns)
     assert got.count() == res["rows"]
+    # --out holds only the chunk map; the stage tables survive beside it
+    assert all(
+        os.path.isfile(os.path.join(out_dir, f)) for f in os.listdir(out_dir)
+    )
+    assert res["workdir"] == out_dir + "_stages"
+    assert spark.read.parquet(out_dir + "_stages/clean").count() > 0
+
+
+def test_cli_resume_store_recorded_without_seen_filter(spark, tmp_path, capsys, monkeypatch):
+    """A store created with the removed ``--seen-filter none`` recorded
+    ``"seen_filter": null``; --resume (and lineage) must reopen it with
+    the bloom gate, which is exact — same crawl semantics."""
+    from mklab_focused_crawler_spark.operators import crawl
+
+    root = str(tmp_path / "legacy")
+    argv = ["crawl", "--root", root, "--synthetic-pages", "200", "--hosts",
+            "10", "--seed-count", "5", "--iterations", "1"]
+    main(argv)
+    capsys.readouterr()
+    meta_p = os.path.join(root, "cli_meta.json")
+    with open(meta_p) as f:
+        meta = json.load(f)
+    meta["seen_filter"] = None
+    with open(meta_p, "w") as f:
+        json.dump(meta, f)
+
+    kinds = []
+
+    class Recording(crawl.CrawlLoop):
+        def __init__(self, *a, seen_filter="bloom", **kw):
+            kinds.append(seen_filter)
+            super().__init__(*a, seen_filter=seen_filter, **kw)
+
+    monkeypatch.setattr(crawl, "CrawlLoop", Recording)
+    main(argv + ["--resume"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["start_iteration"] == 1 and out["completed_iterations"] == 2
+    main(["lineage", "--root", root])
+    assert capsys.readouterr().out.strip()
+    assert kinds == ["bloom", "bloom"]

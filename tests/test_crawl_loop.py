@@ -7,6 +7,7 @@ robots honored, resume-from-snapshot equivalence.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mklab_focused_crawler_spark.operators.crawl import (
@@ -44,8 +45,8 @@ def _simulate(spark, pages, robots, seeds, max_iters=MAX_ITERS):
     )
 
 
-def _run_loop(spark, root, pages, robots, seeds, iters=MAX_ITERS, start=0):
-    loop = CrawlLoop(spark, str(root))
+def _run_loop(spark, root, pages, robots, seeds, iters=MAX_ITERS, start=0, **loop_kw):
+    loop = CrawlLoop(spark, str(root), **loop_kw)
     if start == 0:
         loop.init(seeds, pages.select("url", "shares", "pub_ms"))
     return loop, loop.run(pages, robots, max_iterations=iters, start_iteration=start)
@@ -80,11 +81,10 @@ def test_crawl_parity_with_incremental_bloom(spark, tmp_path, monkeypatch):
     ~10^9 seen keys: filters too big to broadcast, incremental cogroup
     merge into the filter table) and assert identical crawl order +
     seen set."""
-    from mklab_focused_crawler_spark.operators import crawl as crawl_mod
+    from mklab_focused_crawler_spark.operators import seen
 
-    monkeypatch.setattr(crawl_mod, "BROADCAST_ANTI_MAX_KEYS", -1)
-    monkeypatch.setattr(crawl_mod, "FILTER_INCREMENTAL_MIN_KEYS", 0)
-    monkeypatch.setattr(crawl_mod, "BROADCAST_BLOOM_MAX_BYTES", 0)
+    monkeypatch.setattr(seen, "BROADCAST_ANTI_MAX_KEYS", -1)
+    monkeypatch.setattr(seen, "BROADCAST_BLOOM_MAX_BYTES", 0)
     pages, robots, seeds = _setup(spark)
     sim = _simulate(spark, pages, robots, seeds, max_iters=3)
     loop, _ = _run_loop(spark, tmp_path / "inc", pages, robots, seeds, iters=3)
@@ -103,9 +103,9 @@ def test_crawl_parity_with_broadcast_bloom(spark, tmp_path, monkeypatch):
     bloom bits still broadcastable: driver-held filter + pandas-UDF
     probe + exact confirm) and assert identical crawl order + seen
     set."""
-    from mklab_focused_crawler_spark.operators import crawl as crawl_mod
+    from mklab_focused_crawler_spark.operators import seen
 
-    monkeypatch.setattr(crawl_mod, "BROADCAST_ANTI_MAX_KEYS", -1)
+    monkeypatch.setattr(seen, "BROADCAST_ANTI_MAX_KEYS", -1)
     pages, robots, seeds = _setup(spark)
     sim = _simulate(spark, pages, robots, seeds, max_iters=3)
     loop, _ = _run_loop(spark, tmp_path / "bb", pages, robots, seeds, iters=3)
@@ -281,21 +281,24 @@ def test_resume_from_snapshot(spark, tmp_path):
     pages.unpersist()
 
 
-def test_crawl_parity_across_regime_transition(spark, tmp_path, monkeypatch):
-    """Cross the anti-join -> driver-bloom boundary MID-RUN (the seen
-    set outgrows BROADCAST_ANTI_MAX_KEYS between iterations, as it does
-    on any real crawl that starts small): the driver bloom must be
-    (re)built from the full frontier on first use, not just from keys
-    appended after the switch — golden order + seen parity across the
-    whole run pins that."""
-    from mklab_focused_crawler_spark.operators import crawl as crawl_mod
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_crawl_parity_across_regime_transition(spark, tmp_path, monkeypatch, kind):
+    """Cross the anti-join -> filter boundary MID-RUN (the seen set
+    outgrows BROADCAST_ANTI_MAX_KEYS between iterations, as it does on
+    any real crawl that starts small): the filter (driver bloom, or the
+    cuckoo filter table) must be (re)built from the full frontier on
+    first use, not just from keys appended after the switch — golden
+    order + seen parity across the whole run pins that."""
+    from mklab_focused_crawler_spark.operators import seen
 
     # seeds = 10 <= 40 -> anti regime at init; the frontier outgrows 40
-    # within the first iterations -> bloom regime for the rest
-    monkeypatch.setattr(crawl_mod, "BROADCAST_ANTI_MAX_KEYS", 40)
+    # within the first iterations -> filter regime for the rest
+    monkeypatch.setattr(seen, "BROADCAST_ANTI_MAX_KEYS", 40)
     pages, robots, seeds = _setup(spark)
     sim = _simulate(spark, pages, robots, seeds)
-    loop, stats = _run_loop(spark, tmp_path / "trans", pages, robots, seeds)
+    loop, _ = _run_loop(
+        spark, tmp_path / "trans", pages, robots, seeds, seen_filter=kind
+    )
     # the boundary was actually crossed (otherwise this test is vacuous)
     assert loop._n_seen > 40 >= N_SEEDS
     log = loop.crawl_log().collect()
@@ -305,4 +308,20 @@ def test_crawl_parity_across_regime_transition(spark, tmp_path, monkeypatch):
         r["canonical_url"] for r in loop.seen_df().select("canonical_url").collect()
     }
     assert got_seen == sim["seen"]
+    pages.unpersist()
+
+
+def test_init_in_driver_bloom_regime_writes_no_filter_table(spark, tmp_path, monkeypatch):
+    """The driver-bloom regime keeps its filter on the driver and builds
+    it on the first prune; seeding the frontier past the anti-join
+    threshold must not build (or write) a seen_filter table."""
+    from mklab_focused_crawler_spark.operators import seen
+    from mklab_focused_crawler_spark.storage.snapshot import SnapshotTable
+
+    monkeypatch.setattr(seen, "BROADCAST_ANTI_MAX_KEYS", 5)
+    pages, _robots, seeds = _setup(spark)
+    loop = CrawlLoop(spark, str(tmp_path / "init"))
+    loop.init(seeds, pages.select("url", "shares", "pub_ms"))
+    assert loop.gate.regime(loop._n_seen) == "driver_bloom"
+    assert not SnapshotTable(str(tmp_path / "init"), "seen_filter").exists()
     pages.unpersist()

@@ -95,11 +95,11 @@ def test_bloom_incremental_merge_no_false_negatives(spark):
     survivors = seen_mod.filter_unseen(all_keys, empty_seen, merged)
     # all 400 pass the exact anti-join (seen empty), but none may have
     # skipped the bloom as a definite miss — check via the broadcast path
-    hits = seen_mod.filter_unseen(
-        all_keys, all_keys, merged, broadcast_bloom=True
-    )
+    bc = spark.sparkContext.broadcast(seen_mod.collect_bloom(merged))
+    hits = seen_mod.filter_unseen(all_keys, all_keys, bc)
     assert hits.count() == 0  # every key bloom-hits and is confirmed seen
     assert survivors.count() == 400
+    bc.destroy()
 
 
 # --------------------------- synthetic web ---------------------------
@@ -218,30 +218,31 @@ def test_bloom_positions_no_false_negatives_property(hashes):
     assert hit.all()  # every inserted key must test positive
 
 
-def test_merge_bloom_driver_arrow_matches_rows():
-    """The Arrow fast path of the driver-side bloom merge must produce
-    bit-identical filters to the Row-list path, both on fresh buckets
+def test_merge_bloom_driver_matches_distributed_merge(spark):
+    """The driver-side bloom merge (the seen gate's broadcast regime)
+    must produce bit-identical filters to the distributed build_bloom /
+    merge_bloom pair (its filter-table regime), both on fresh buckets
     and when merging into existing ones."""
     import numpy as np
     import pyarrow as pa
 
-    from mklab_focused_crawler_spark.operators.seen import merge_bloom_driver
-
     rng = np.random.default_rng(7)
     keys = rng.integers(0, 2**59, 5000)
     bks = rng.integers(0, 8, 5000)
-    rows = [{"bucket": int(b), "url_hash": int(k)} for b, k in zip(bks, keys)]
     tbl = pa.table(
         {"bucket": pa.array(bks, pa.int32()), "url_hash": pa.array(keys, pa.int64())}
     )
-    t_rows, t_arrow = {}, {}
+    df = spark.createDataFrame(tbl.to_pandas())
+    table = seen_mod.build_bloom(df)
+    t_driver = {}
     for _ in range(2):  # second pass merges into existing filters
-        merge_bloom_driver(t_rows, rows)
-        merge_bloom_driver(t_arrow, tbl)
-        assert t_rows.keys() == t_arrow.keys()
-        for bk in t_rows:
-            assert t_rows[bk][0] == t_arrow[bk][0]
-            assert np.array_equal(t_rows[bk][1], t_arrow[bk][1])
+        seen_mod.merge_bloom_driver(t_driver, tbl)
+        t_dist = seen_mod.collect_bloom(table)
+        assert t_driver.keys() == t_dist.keys()
+        for bk in t_driver:
+            assert t_driver[bk][0] == t_dist[bk][0]
+            assert np.array_equal(t_driver[bk][1], t_dist[bk][1])
+        table = seen_mod.merge_bloom(table, df)
 
 
 # --------------------------- extraction ------------------------------

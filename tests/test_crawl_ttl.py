@@ -52,11 +52,11 @@ def test_ttl_reclaim_updates_not_duplicates(spark, tmp_path, filt, monkeypatch):
     """A TTL-expired URL is re-claimed and its document row is updated
     in place (merge), not appended twice."""
     if filt == "cuckoo":
-        # force the incremental maintenance path so insert_keys +
-        # delete_keys (physical eviction) actually run
-        from mklab_focused_crawler_spark.operators import crawl as crawl_mod
+        # force the filter-table regime so insert_keys + delete_keys
+        # (physical eviction) actually run
+        from mklab_focused_crawler_spark.operators import seen
 
-        monkeypatch.setattr(crawl_mod, "FILTER_INCREMENTAL_MIN_KEYS", 0)
+        monkeypatch.setattr(seen, "BROADCAST_ANTI_MAX_KEYS", -1)
     pages, robots, seeds = _two_page_web(spark)
     loop = CrawlLoop(
         spark, str(tmp_path / filt), seen_filter=filt, ttl_iterations=2

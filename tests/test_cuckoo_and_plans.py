@@ -14,6 +14,7 @@ from mklab_focused_crawler_spark.operators.cuckoo import (
     build_cuckoo,
     delete_keys,
     filter_unseen_cuckoo,
+    insert_keys,
 )
 
 # --------------------------- cuckoo core -----------------------------
@@ -98,6 +99,20 @@ def test_cuckoo_filter_unseen_and_ttl(spark):
     )
     assert still.count() == 0
     seen.unpersist(); cuckoo.unpersist(); cuckoo2.unpersist()
+
+
+def test_cuckoo_insert_overflow_saturates_without_false_negatives(spark):
+    """Inserting far past a bucket's sizing overflows the eviction walk;
+    the bucket must saturate (every probe confirmed exactly) instead of
+    failing the job or losing a key — and later inserts and TTL deletes
+    on it stay no-ops until a rebuild."""
+    seen = _seen_df(spark, 400, n_buckets=1)
+    filt = insert_keys(build_cuckoo(seen.limit(2)), seen).persist()
+    assert [r["m"] for r in filt.collect()] == [0]
+    assert filter_unseen_cuckoo(seen, seen, filt).count() == 0
+    again = delete_keys(insert_keys(filt, _seen_df(spark, 3, n_buckets=1)), seen)
+    assert [(r["m"], r["n_keys"]) for r in again.collect()] == [(0, 405)]
+    filt.unpersist()
 
 
 # --------------------------- plan shape ------------------------------

@@ -260,6 +260,15 @@ def test_derived_k_lists_scales_and_twins_agree(spark, tmp_path):
     cents_pq = sim.train_ivf_codebook_parquet(path)
     assert cents_df == cents_pq and len(cents_df) == k
 
+    # the PQ trainers decimate with the coarse trainer's modulus (derived
+    # k, not the K_LISTS default): one collected sample serves both
+    mod = sim.train_sample_mod(n, k=k)
+    assert mod != sim.train_sample_mod(n)
+    sample = [(v, e) for v, e in zip(pdf["vec_id"], pdf["embedding"]) if v % mod == 0]
+    books = sim.train_pq_codebooks(sample)
+    assert sim.train_pq_codebooks_df(emb) == books
+    assert sim.train_pq_codebooks_parquet(path) == books
+
     con = duckdb.connect()
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
 

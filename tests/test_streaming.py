@@ -1386,6 +1386,54 @@ def test_key_buckets_derivation_and_store_meta(spark, tmp_path):
         )
 
 
+def test_streaming_lsh_reopens_legacy_store_at_fixed_fan_out(spark, tmp_path):
+    """A store written before lsh_meta.json existed (index tables laid
+    out at the fixed LSH_KEY_BUCKETS, no meta) reopened with
+    key_buckets=None must commit LSH_KEY_BUCKETS — deriving a new
+    fan-out from the next batch would probe (and append) a different
+    partitioning than the committed index."""
+    import pandas as pd
+
+    from mklab_focused_crawler_spark.streaming.dedup import (
+        LSH_KEY_BUCKETS,
+        _lsh_process_batch,
+        _make_lsh_tables,
+        _read_key_buckets,
+        derive_key_buckets,
+        read_streaming_lsh_pairs,
+        resolve_key_buckets,
+    )
+
+    def text(d, last="end"):
+        return " ".join([f"d{d}w{i}" for i in range(39)] + [last])
+
+    old = pd.DataFrame({"doc_id": [0, 1, 2], "text": [text(d) for d in range(3)]})
+    # doc 100 near-duplicates doc 0 (one word of 40 differs)
+    new = pd.DataFrame(
+        {"doc_id": [100, 101, 102], "text": [text(0, "fin"), text(11), text(12)]}
+    )
+    store = str(tmp_path / "legacy_store")
+    tables = _make_lsh_tables(store)
+    # an explicit fan-out on the batch step commits no meta: the legacy layout
+    _lsh_process_batch(
+        spark.createDataFrame(old), 0, tables, None, None, spark,
+        key_buckets=LSH_KEY_BUCKETS, store_root=store,
+    )
+    assert resolve_key_buckets(store, None) == LSH_KEY_BUCKETS
+    assert _read_key_buckets(store) == LSH_KEY_BUCKETS  # committed
+    # 3 docs × 32 bands would derive a larger fan-out than the layout's
+    assert derive_key_buckets(96) != LSH_KEY_BUCKETS
+    st = _lsh_process_batch(
+        spark.createDataFrame(new), 1, tables, None, None, spark,
+        key_buckets=None, store_root=store,
+    )
+    assert st["key_buckets"] == LSH_KEY_BUCKETS
+    bands = tables["bands"].read(spark)
+    assert bands.agg({"key_bucket": "max"}).collect()[0][0] < LSH_KEY_BUCKETS
+    got = {(r["doc_a"], r["doc_b"]) for r in read_streaming_lsh_pairs(spark, store).collect()}
+    assert got == {(0, 100)}
+
+
 def test_min_label_propagation_long_chain_converges_logarithmically(spark):
     """VERDICT r4 item 7 made measurable — and a regression pin for the
     r5 shortcutting fix: a 300-edge chain has diameter 300, so the old
